@@ -14,9 +14,11 @@ Streaming plan:
 Exact distinct-count over a stream needs per-key state proportional to
 distinct IPs; ``approx_count_distinct`` (HyperLogLog++) keeps state
 O(sketch) per group — at 100 TB/day this is the only sustainable shape.
-An exact variant via ``dropDuplicates`` + watermark is provided for
-bounded windows (state = one row per distinct tuple inside the
-watermark horizon).
+The exact variant, ``streaming_dedup_counts``, watermarks the dedup key's
+own ``day`` column, so its dedup state holds one row per distinct
+(ip, day, keys) for the days the watermark has not passed (the newest
+two under the default 1-day delay) and is evicted as it moves on. A row
+whose day is already behind the watermark is dropped.
 """
 
 from __future__ import annotations
@@ -67,29 +69,31 @@ def streaming_dedup_counts(
     ip_col: str = "ip",
     key_cols: tuple[str, ...] = ("risk", "asn", "country"),
     watermark: str = "1 day",
-    window: str = "1 day",
 ) -> DataFrame:
-    """Exact streaming variant: watermarked dropDuplicates (state = one
-    row per distinct (ip, window, keys) within the horizon) then a plain
-    windowed count — byte-identical semantics to the batch Q2+Q4 for
-    data arriving within the watermark."""
+    """Exact per-day distinct-IP counts: the batch Q2+Q4 (distinct
+    (ip, day, keys) then count per (day, keys), reference
+    main.py:206-215) over a stream, emitted in append mode once a day's
+    window closes.
+
+    The watermark sits on ``day``, which is part of the dedup key, so
+    the dedup state holds one row per distinct (ip, day, keys) for the
+    days the watermark has not passed and drops a day's rows once it
+    does. A row whose day is already behind the watermark is dropped:
+    its window has closed, so it changes no emitted count. Window
+    [D, D+1) closes once a row of day D + 1 + ``watermark`` arrives."""
     deduped = (
-        stream.withWatermark(ts_col, watermark)
-        .select(
-            F.col(ts_col),
-            F.col(ip_col).alias("ip"),
-            # the batch semantics dedups per (ip, DAY, keys) — the day
-            # must be part of the dedup key, else first-seen wins
-            # across days (reference main.py:211)
+        stream.select(
             F.date_trunc("day", F.col(ts_col)).alias("day"),
+            F.col(ip_col).alias("ip"),
             *key_cols,
         )
+        .withWatermark("day", watermark)
         .dropDuplicates(["ip", "day", *key_cols])
     )
+    # a window, not a plain ``day`` group key: append mode emits a
+    # window only once the watermark has passed its end
     return (
-        deduped.groupBy(
-            F.window(F.col(ts_col), window).alias("win"), *key_cols
-        )
+        deduped.groupBy(F.window("day", "1 day").alias("win"), *key_cols)
         .agg(F.count(F.lit(1)).alias("count"))
         .select(F.col("win.start").alias("date"), *key_cols, "count")
     )

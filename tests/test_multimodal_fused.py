@@ -153,12 +153,16 @@ def test_decode_memo_keys_interchange():
     rate, _, samples = codecs.decode_wav(aud)
     assert afp == codecs.audio_fingerprint64(samples, rate)
 
-    # single-purpose → fused direction (seeded sentinels are read)
+    # single-purpose → fused direction (seeded sentinels are read); the
+    # memo is process-global, so the sentinels must not outlive the test
     codecs._PAYLOAD_MEMO.clear()
-    assert codecs.payload_memo("dhash", img, lambda: "SENTINEL-DH") == "SENTINEL-DH"
-    assert _decode_all_one("image", img, 500)[5] == "SENTINEL-DH"
-    assert codecs.payload_memo("afp", aud, lambda: "SENTINEL-FP") == "SENTINEL-FP"
-    assert _decode_all_one("audio", aud, 500)[6] == "SENTINEL-FP"
+    try:
+        assert codecs.payload_memo("dhash", img, lambda: "SENTINEL-DH") == "SENTINEL-DH"
+        assert _decode_all_one("image", img, 500)[5] == "SENTINEL-DH"
+        assert codecs.payload_memo("afp", aud, lambda: "SENTINEL-FP") == "SENTINEL-FP"
+        assert _decode_all_one("audio", aud, 500)[6] == "SENTINEL-FP"
+    finally:
+        codecs._PAYLOAD_MEMO.clear()
 
 
 def test_decode_all_one_decodes_once_when_cold(monkeypatch):

@@ -4,7 +4,10 @@ mapInPandas plumbing."""
 from __future__ import annotations
 
 import datetime
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from aggregator_spark.operators.multimodal import (
@@ -18,12 +21,13 @@ from aggregator_spark.streaming.ingest import (
 )
 
 
-def _write_scan_parquet(spark, path):
+def _write_scan_parquet(spark, path, extra=()):
     rows = [
         (datetime.datetime(2016, 9, 28, 1, 0), "71.3.0.1", 1, 4444, "US"),
         (datetime.datetime(2016, 9, 28, 2, 0), "71.3.0.1", 1, 4444, "US"),  # dup ip
         (datetime.datetime(2016, 9, 28, 3, 0), "71.3.0.2", 1, 4444, "US"),
         (datetime.datetime(2016, 9, 29, 1, 0), "71.3.0.1", 1, 4444, "US"),
+        *extra,
     ]
     spark.createDataFrame(rows, LOGENTRY).write.mode("overwrite").parquet(path)
 
@@ -31,10 +35,14 @@ def _write_scan_parquet(spark, path):
 @pytest.mark.parametrize("variant", ["approx", "exact"])
 def test_streaming_daily_counts(spark, tmp_path, variant):
     src = str(tmp_path / "scans")
-    _write_scan_parquet(spark, src)
+    # a third day moves the 1-day watermark past the first day's window
+    _write_scan_parquet(
+        spark, src, [(datetime.datetime(2016, 9, 30, 1, 0), "71.3.0.3", 1, 4444, "US")]
+    )
     stream = spark.readStream.schema(LOGENTRY).parquet(src)
     fn = streaming_daily_counts if variant == "approx" else streaming_dedup_counts
     agg = fn(stream)
+    assert agg.columns == ["date", "risk", "asn", "country", "count"]
     q = (
         agg.writeStream.outputMode(
             "append" if variant == "exact" else "update"
@@ -50,18 +58,22 @@ def test_streaming_daily_counts(spark, tmp_path, variant):
         q.processAllAvailable()
     finally:
         q.stop()
-    rows = {
-        (r["date"].date().isoformat(), r["risk"]): r["count"]
+    got = [
+        (r["date"].date().isoformat(), r["risk"], r["asn"], r["country"], r["count"])
         for r in spark.sql(f"SELECT * FROM out_{variant}").collect()
-    }
-    # day1: ips .1 (twice) and .2 → 2 distinct; day2: 1
-    # (append mode may hold back the last window until the watermark
-    # passes — assert on what was emitted)
-    if rows:
-        assert rows.get(("2016-09-28", 1)) in (2, None) or True
-    # exact variant with processAllAvailable flushes everything at EOF?
-    # both variants must at least run without error and yield a stable schema
-    assert set(agg.columns) == {"date", "risk", "asn", "country", "count"}
+    ]
+    # day 1: ips .1 (twice) and .2 → 2 distinct; days 2 and 3: 1 each
+    if variant == "approx":
+        # update mode emits every group the batch touched
+        assert sorted(got) == [
+            ("2016-09-28", 1, 4444, "US", 2),
+            ("2016-09-29", 1, 4444, "US", 1),
+            ("2016-09-30", 1, 4444, "US", 1),
+        ]
+    else:
+        # append mode emits a day once the watermark passes it: the
+        # newest two days stay open
+        assert got == [("2016-09-28", 1, 4444, "US", 2)]
 
 
 def test_streaming_exact_matches_batch(spark, tmp_path):
@@ -70,19 +82,9 @@ def test_streaming_exact_matches_batch(spark, tmp_path):
     src = str(tmp_path / "scans2")
     _write_scan_parquet(spark, src)
     stream = spark.readStream.schema(LOGENTRY).parquet(src)
-    from pyspark.sql import functions as F
-
-    agg = (
-        stream.withWatermark("date", "1 day")
-        .withColumn("day", F.date_trunc("day", "date"))
-        .dropDuplicates(["ip", "day", "risk", "asn", "country"])
-        .groupBy(
-            F.window("date", "1 day").alias("win"), "risk", "asn", "country"
-        )
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
     q = (
-        agg.writeStream.outputMode("complete")
+        streaming_dedup_counts(stream)
+        .writeStream.outputMode("complete")
         .format("memory")
         .queryName("out_complete")
         .start()
@@ -90,13 +92,118 @@ def test_streaming_exact_matches_batch(spark, tmp_path):
     try:
         q.processAllAvailable()
         got = {
-            (r["win"]["start"].date().isoformat(), r["count"])
+            (r["date"].date().isoformat(), r["count"])
             for r in spark.sql("SELECT * FROM out_complete").collect()
         }
     finally:
         q.stop()
     # per-day dedup: day1 has distinct ips {.1, .2} → 2, day2 has {.1} → 1
     assert got == {("2016-09-28", 2), ("2016-09-29", 1)}
+
+
+def _scan_day(d: int) -> list[tuple]:
+    """Day ``d`` of a tiny scan feed: 3-5 hosts, each scanned twice that
+    day (a duplicate tuple), two of them on every day."""
+    day = datetime.datetime(2016, 9, 1 + d)
+    rows = []
+    for i in range(3 + d % 3):
+        host = ("71.3.0.1", "71.3.0.2")[i] if i < 2 else f"71.3.{d}.{i}"
+        tup = (host, 1 + i % 2, 4444 + i % 3, ("US", "DE")[i % 2])
+        rows.append((day + datetime.timedelta(hours=i), *tup))
+        rows.append((day + datetime.timedelta(hours=i + 12), *tup))
+    return rows
+
+
+def _land_parquet(land, name: str, rows: list[tuple], order: int) -> None:
+    """One parquet file per landing, its modification time setting the
+    order in which the file source takes it."""
+    cols = list(zip(*rows))
+    table = pa.table(
+        {
+            "date": pa.array(cols[0], pa.timestamp("us", tz="UTC")),
+            "ip": pa.array(cols[1], pa.string()),
+            "risk": pa.array(cols[2], pa.int32()),
+            "asn": pa.array(cols[3], pa.int64()),
+            "country": pa.array(cols[4], pa.string()),
+        }
+    )
+    path = str(land / f"{name}.parquet")
+    pq.write_table(table, path)
+    mtime = 1_500_000_000 + 60 * order
+    os.utime(path, (mtime, mtime))
+
+
+def test_streaming_dedup_state_is_bounded(spark, tmp_path):
+    """The exact stream's dedup state holds only the days the watermark
+    has not passed: after every one-day batch it is at most the newest
+    two days' distinct tuples, the closed windows equal the batch
+    aggregate, and a late duplicate for a closed day changes nothing."""
+    from aggregator_spark.operators.aggregate import aggregate_counts
+
+    days = 6
+    land = tmp_path / "land"
+    land.mkdir()
+    feed = [_scan_day(d) for d in range(days)]
+    for d, rows in enumerate(feed):
+        _land_parquet(land, f"day{d}", rows, d)
+    distinct = [len({r[1:] for r in rows}) for rows in feed]
+
+    emitted: list[tuple] = []
+
+    def drain() -> list:
+        stream = (
+            spark.readStream.schema(LOGENTRY)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(land))
+        )
+        q = (
+            streaming_dedup_counts(stream)
+            .writeStream.outputMode("append")
+            .foreachBatch(lambda df, _: emitted.extend(map(tuple, df.collect())))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            # availableNow stops by itself once the landed files are read
+            assert q.awaitTermination(120), "availableNow run did not finish"
+        finally:
+            q.stop()
+        return [p for p in q.recentProgress if p["numInputRows"] > 0]
+
+    def dedupe(p) -> dict:
+        return next(s for s in p["stateOperators"] if s["operatorName"] == "dedupe")
+
+    batches = drain()
+    assert len(batches) == days
+    for d, p in enumerate(batches):
+        assert dedupe(p)["numRowsTotal"] <= distinct[d] + distinct[max(0, d - 1)], d
+
+    # the 1-day watermark leaves the newest two days open
+    closed = datetime.datetime(2016, 9, 1 + days - 2)
+    expected = {
+        (r["date"], r["risk"], r["asn"], r["country"], r["count"])
+        for r in aggregate_counts(
+            spark.createDataFrame([r for rows in feed for r in rows], LOGENTRY),
+            threshold=-1,
+        ).collect()
+        if r["date"] < closed
+    }
+    assert len(emitted) == len(set(emitted))
+    assert set(emitted) == expected
+
+    # a re-scan of day 0's first tuple and a new host on day 1, landed
+    # after the watermark passed both days: dropped as late
+    late = [
+        feed[0][0],
+        (datetime.datetime(2016, 9, 2, 5), "71.3.9.9", 1, 4444, "US"),
+    ]
+    _land_parquet(land, "late", late, days)
+    before = list(emitted)
+    (late_batch,) = drain()
+    assert dedupe(late_batch)["numRowsDroppedByWatermark"] == len(late)
+    assert dedupe(late_batch)["numRowsTotal"] <= distinct[-1] + distinct[-2]
+    assert emitted == before
 
 
 def _media_df(spark):
