@@ -85,7 +85,8 @@ def q_heavy_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aggregator_spark.operators.util import scatter
 
     # bigram generation + MG pass are CPU-bound: don't inherit the
-    # small scan's single split (scatter is a no-op at real scale).
+    # small scan's single split (scatter leaves a scan that already
+    # has enough splits as it is).
     # Bigrams come from the Arrow worker, not a JVM HOF transform —
     # the interpreted-lambda path was the dominant sf10 cost (see
     # bigram_stream; 8.5 s → 2.3 s warm at sf1)

@@ -120,8 +120,13 @@ def _driver_components(edges: DataFrame, rows: list) -> DataFrame:
     # the planner sizes the join itself (labels ≤ 2×edges rows of two
     # ids, so the hinted relation is a few MB at most). The
     # distributed path above the driver ceiling carries no hint.
+    # The bound is in CANONICAL edges whichever caller this is:
+    # connected_components passes both directions of every edge,
+    # connected_components_star one (src < dst) — counting the rows
+    # with src <= dst reads the canonical count off either (a self-loop
+    # appears once in the symmetric relation).
     out = out.localCheckpoint(eager=True)
-    if len(rows) <= _CC_DRIVER_EDGES_DEFAULT:
+    if sum(1 for r in rows if r[0] <= r[1]) <= _CC_DRIVER_EDGES_DEFAULT:
         out = F.broadcast(out)
     return out
 

@@ -15,12 +15,23 @@ def scatter(df: DataFrame, partitions: int | None = None) -> DataFrame:
     repartition is a cheap rebalance; on small inputs it is the
     difference between 1× and N× parallelism. The shuffle it introduces
     is negligible next to the per-row work these operators do.
+
+    The decision is read off the physical plan and runs no job:
+
+    - a plan holding an exchange (or a persisted frame, whose cached
+      plan is a query stage) is wrapped in ``AdaptiveSparkPlan``,
+      whose partition count is fixed only at run time — asking for it
+      (``df.rdd``) would run every upstream shuffle stage once here and
+      again in the real action. Such a frame is always repartitioned:
+      at most one extra round-robin exchange, never a second upstream
+      run;
+    - otherwise (a scan plus narrow operators) the RDD lineage is
+      built without running anything, and a frame already at ≥ n
+      partitions is returned as is — at 100 TB the scan arrives as
+      thousands of splits and must not pay a full shuffle for nothing.
     """
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # already at least as parallel as the session? Don't pay a full
-    # shuffle of the payload for nothing — at 100 TB the scan arrives
-    # as thousands of splits and this must be a no-op. (getNumPartitions
-    # plans the RDD lineage but runs no job.)
-    if df.rdd.getNumPartitions() >= n:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan" and df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)

@@ -150,3 +150,28 @@ def test_broadcast_hint_bounded_by_fixed_default(spark, monkeypatch):
     out = comp_mod._driver_components(edges, rows)
     assert not hinted(out)
     assert _labels(out) == {i: 0 for i in range(26)}
+
+
+def test_broadcast_hint_gate_in_canonical_edges(spark, monkeypatch):
+    """The hint bound counts CANONICAL edges for both variants:
+    connected_components hands the union-find the symmetric relation
+    (two rows per edge), connected_components_star the canonical one,
+    and both must hint a graph at the bound and neither one above
+    it."""
+    import aggregator_spark.operators.components as comp_mod
+
+    def hinted(df) -> bool:
+        return "ResolvedHint" in (
+            df._jdf.queryExecution().analyzed().toString()
+        )
+
+    df = spark.createDataFrame(GRAPHS["chain"], "doc_a long, doc_b long")
+    # 25 canonical edges, 50 symmetric rows
+    monkeypatch.setattr(comp_mod, "_CC_DRIVER_EDGES_DEFAULT", 25)
+    for cc in (connected_components, connected_components_star):
+        out = cc(df)
+        assert hinted(out), cc.__name__
+        assert _labels(out) == {i: 0 for i in range(26)}
+    monkeypatch.setattr(comp_mod, "_CC_DRIVER_EDGES_DEFAULT", 24)
+    for cc in (connected_components, connected_components_star):
+        assert not hinted(cc(df)), cc.__name__

@@ -138,8 +138,9 @@ EXCHANGE_PINS = {
     # (n_tokens now comes from the rebuild aggregation itself; the old
     # final join broadcast a second per-doc relation). +1 Exchange:
     # text.gram_stream scatters the doc scan before its Arrow pass
-    # (the doc_shingles discipline — a no-op at real scale where the
-    # scan already yields thousands of splits)
+    # (the doc_shingles discipline — a no-op only on a plain scan that
+    # already has enough splits; after an exchange scatter always
+    # adds its round-robin exchange)
     "span_rewrite_incremental": (6, 4),
     # r9 late novelties. ngram_novelty: gram-df agg + per-doc residue
     # joins (the corpus-wide gram relation is never joined back).
@@ -181,7 +182,7 @@ EXCHANGE_PINS = {
     # r13 small-graph CC broadcast labels (see dedup_keep_best)
     "dedup_fuzzy_keep_union": (1, 1),
     # +1 Exchange r13: gram_stream's scatter before the Arrow gram
-    # pass (no-op at real scale, see span_rewrite_incremental)
+    # pass (see span_rewrite_incremental)
     "contamination_by_source": (6, 3),
     # family overlap: both families' full verify pipelines live in ONE
     # plan (nothing checkpointed out except the LSH candidates) — the
