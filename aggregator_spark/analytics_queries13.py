@@ -50,22 +50,19 @@ def q_served_media_near_dup(
     # `_ckpt_ids`: each CC loop tracks its own checkpoint blocks off
     # the LogicalRDD plan instead of diffing the global persistent set
     # (the diff was why this overlap failed when first tried).
-    from concurrent.futures import ThreadPoolExecutor
+    from aggregator_spark.parallel import run_jobs
 
     builders = (
         ("image", served_image_near_dup),
         ("audio", served_audio_near_dup),
         ("video", served_video_near_dup),
     )
-
-    def build(item):
-        name, fn = item
-        return fn(spark, root).select(
+    parts = run_jobs([
+        lambda name=name, fn=fn: fn(spark, root).select(
             F.lit(name).alias("modality"), "doc_id", "component", "keep"
         )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        parts = list(pool.map(build, builders))
+        for name, fn in builders
+    ])
     out = parts[0].unionByName(parts[1]).unionByName(parts[2])
     return out.orderBy("modality", "doc_id")
 

@@ -532,21 +532,16 @@ def q_dedup_family_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlap them on driver threads (guide §2.6, the
     # fuzzy_dedup_keep_union pattern; safe since r13's per-DataFrame
     # checkpoint tracking)
-    from concurrent.futures import ThreadPoolExecutor
+    from aggregator_spark.parallel import run_jobs
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cand_fut = pool.submit(
-            lambda: D.lsh_candidate_pairs(
-                docs, buckets=_mh_buckets(spark, sf_dir)
-            ).localCheckpoint(eager=True)
-        )
-        sim_fut = pool.submit(
-            lambda: D.simhash_near_dup(docs).select(
-                "doc_a", "doc_b", F.lit(1).alias("in_sim")
-            )
-        )
-        cand = cand_fut.result()
-        sim = sim_fut.result()
+    cand, sim = run_jobs([
+        lambda: D.lsh_candidate_pairs(
+            docs, buckets=_mh_buckets(spark, sf_dir)
+        ).localCheckpoint(eager=True),
+        lambda: D.simhash_near_dup(docs).select(
+            "doc_a", "doc_b", F.lit(1).alias("in_sim")
+        ),
+    ])
     jac = D.verified_jaccard_pairs(
         docs, cand, threshold=JACCARD_THRESHOLD
     ).select("doc_a", "doc_b", F.lit(1).alias("in_jac"))
@@ -1023,7 +1018,7 @@ def incremental_kept_docs(
     when None (the streaming case, where batch ids follow no residue
     convention) membership is tagged explicitly on the union — the
     predicate becomes a literal column, never a guess."""
-    from concurrent.futures import ThreadPoolExecutor
+    from aggregator_spark.parallel import run_jobs
 
     # r14 (guide §2.6, VERDICT r13 item 5): the batch SIGNING does not
     # depend on the quality gate — a production pipeline signs a batch
@@ -1035,22 +1030,17 @@ def incremental_kept_docs(
     # candidate set is bit-identical to signing post-gate (md5
     # construction is deterministic). Thread-safe with the gate's
     # checkpoint since r13's per-DataFrame _ckpt_ids.
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        sign_fut = pool.submit(
-            lambda: D.lsh_buckets(
-                batch.select("doc_id", "text")
-            ).localCheckpoint(eager=True)
-        )
-        bkeep = (
+    raw_buckets, bkeep = run_jobs([
+        lambda: D.lsh_buckets(
+            batch.select("doc_id", "text")
+        ).localCheckpoint(eager=True),
+        lambda: (
             batch_keep_flags(batch, probes)
             .filter("keep")
             .select("doc_id")
             .localCheckpoint(eager=True)
-        )
-        raw_buckets = sign_fut.result()
-    finally:
-        pool.shutdown(wait=True)
+        ),
+    ])
     bsurv = batch.join(bkeep, "doc_id").select("doc_id", "text")
     if is_new is None:
         union_docs = bsurv.withColumn("_is_new", F.lit(True)).unionByName(
@@ -1093,7 +1083,7 @@ def corpus_prepare_incremental(
     persisted gram index of the survivor corpus (r8): spans the
     archive already holds are removed from the batch entirely, with
     no first-occurrence exception."""
-    from concurrent.futures import ThreadPoolExecutor
+    from aggregator_spark.parallel import run_jobs
 
     # r14 (guide §2.6, VERDICT r13 item 5): the archive gram-index
     # probe does not depend on the gate/dedup chain — prefilter the
@@ -1104,26 +1094,23 @@ def corpus_prepare_incremental(
     # kept_gh ⊆ raw_batch_gh makes the covered positions identical to
     # probing the full index (the hit set is batch-proportional
     # either way).
-    hits_fut = None
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        if span_grams is not None:
-            hits_fut = pool.submit(
-                lambda: span_grams.select("gh")
-                .join(
-                    F.broadcast(
-                        D.span_gram_hashes(batch, n=DUP_SPAN_N)
-                    ),
-                    "gh",
-                )
-                .localCheckpoint(eager=True)
+    def probe_hits():
+        if span_grams is None:
+            return None
+        return (
+            span_grams.select("gh")
+            .join(
+                F.broadcast(D.span_gram_hashes(batch, n=DUP_SPAN_N)), "gh"
             )
-        kept = incremental_kept_docs(
-            batch, survivor_docs, survivor_buckets, probes, is_new
+            .localCheckpoint(eager=True)
         )
-        span_hits = hits_fut.result() if hits_fut is not None else None
-    finally:
-        pool.shutdown(wait=True)
+
+    span_hits, kept = run_jobs([
+        probe_hits,
+        lambda: incremental_kept_docs(
+            batch, survivor_docs, survivor_buckets, probes, is_new
+        ),
+    ])
     # checkpoint the kept batch (batch-proportional (doc_id, text) —
     # the keep-ids checkpoint precedent): the span/chunk/pack tail is
     # ~10 DataFrame constructions over this subtree, and each one

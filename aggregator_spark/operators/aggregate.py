@@ -62,7 +62,6 @@ def aggregate_counts(
     threshold: int = 100,
     approx_distinct: bool = False,
     ordered: bool = True,
-    fused: bool = False,
 ) -> DataFrame:
     """The full stage-1 aggregate (Q2+Q4+F1+Q7+O1, reference main.py:206-215).
 
@@ -70,27 +69,8 @@ def aggregate_counts(
     the reference ``count`` table shape; ``count_amplified`` is the literal
     0.0 placeholder (Q7, reference main.py:209) later filled by
     :func:`aggregator_spark.operators.amplify.amplified_counts`.
-
-    ``fused=True`` computes the identical result as one
-    ``countDistinct('ip')`` aggregation instead of distinct→count —
-    measured ~8% faster at 60M rows (31.8 s vs 34.7 s; Catalyst expands
-    countDistinct into a two-phase aggregate so the win is modest).
-    Default stays the reference-transparent two-step shape.
     """
-    if fused and not approx_distinct:
-        grouped = (
-            logentry.select(
-                F.date_trunc("day", F.col("date")).alias("date"),
-                "risk",
-                "asn",
-                "country",
-                "ip",
-            )
-            .groupBy("date", "asn", "risk", "country")
-            .agg(F.countDistinct("ip").alias("count"))
-            .filter(F.col("count") > F.lit(threshold))
-        )
-    elif approx_distinct:
+    if approx_distinct:
         grouped = (
             logentry.select(
                 F.date_trunc("day", F.col("date")).alias("date"),

@@ -232,64 +232,6 @@ def asof_join_bucketed(
     return _asof_tail(carried, lcols, rcols, tolerance_seconds)
 
 
-def asof_join_auto(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_cols: Sequence[str],
-    bucket_seconds: int = 3600,
-    hot_share_threshold: float = 0.2,
-    sample_fraction: float = 0.01,
-    tolerance_seconds: int | None = None,
-) -> DataFrame:
-    """Adaptive as-of join: measure key skew on a cheap sample, then
-    pick the plain formulation (uniform keys — no bucketing premium)
-    or the bucketed one (a hot key above ``hot_share_threshold`` of
-    rows — bounded per-task input).
-
-    The probe is ONE driver-side row from a sampled count-by-key (the
-    same bounded-collect discipline as the k-means centroid pull,
-    similarity.py): sample ~1% of EACH side — the window sorts the
-    union of left and right rows per key, so a hot key on either side
-    makes the straggler — and take the worse max-share. Sampling error
-    is irrelevant here — the decision only needs to separate "some key
-    owns ≥20% of rows" from "keys are roughly uniform", a gap far
-    wider than 1%-sample noise on any input where the choice matters.
-    Both branches return identical results (pinned by tests), so a
-    borderline flip is a performance detail, never a correctness one.
-    """
-
-    def _max_share(df: DataFrame):
-        sampled = df.sample(fraction=sample_fraction, seed=7).groupBy(
-            on
-        ).agg(F.count(F.lit(1)).alias("__n"))
-        return sampled.agg(
-            (F.max("__n") / F.sum("__n")).alias("share")
-        )
-
-    row = (
-        _max_share(left.select(on))
-        .unionByName(_max_share(right.select(on)))
-        .agg(F.max("share").alias("share"))
-        .collect()[0]
-    )
-    hot_share = row["share"] or 0.0
-    kw = dict(
-        on=on,
-        left_time=left_time,
-        right_time=right_time,
-        right_cols=right_cols,
-        tolerance_seconds=tolerance_seconds,
-    )
-    if hot_share >= hot_share_threshold:
-        return asof_join_bucketed(
-            left, right, bucket_seconds=bucket_seconds, **kw
-        )
-    return asof_join(left, right, **kw)
-
-
 def interval_join(
     left: DataFrame,
     right: DataFrame,

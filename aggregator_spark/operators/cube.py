@@ -69,10 +69,3 @@ def rollup_cube(
             "count_amplified",
         )
     )
-
-
-def all_cubes(fact: DataFrame) -> dict[str, DataFrame]:
-    """The four pre-aggregated rollups off one cached fact
-    (reference main.py:379-384 re-scans fact_count per granularity)."""
-    fact = fact.cache()
-    return {g: rollup_cube(fact, g) for g in GRANULARITIES}

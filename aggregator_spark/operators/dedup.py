@@ -723,28 +723,22 @@ def fuzzy_dedup_keep_union(
     driver threads (guide §2.6; safe since r13's per-DataFrame
     checkpoint tracking): the Python simhash pass back-fills executors
     idled by the shingle→minhash convergence tail and vice versa."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from aggregator_spark.operators.components import (
         _ckpt_ids,
         _unpersist_ids,
         dedup_clusters,
     )
+    from aggregator_spark.parallel import run_jobs
 
     spark = docs.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cand_fut = pool.submit(
-            lambda: lsh_candidate_pairs(
-                docs, id_col, text_col, k, bands, n, buckets
-            ).localCheckpoint(eager=True)
-        )
-        sim_fut = pool.submit(
-            lambda: simhash_near_dup(
-                docs, id_col, text_col, max_hamming
-            ).select("doc_a", "doc_b")
-        )
-        cand = cand_fut.result()
-        sim_edges = sim_fut.result()
+    cand, sim_edges = run_jobs([
+        lambda: lsh_candidate_pairs(
+            docs, id_col, text_col, k, bands, n, buckets
+        ).localCheckpoint(eager=True),
+        lambda: simhash_near_dup(
+            docs, id_col, text_col, max_hamming
+        ).select("doc_a", "doc_b"),
+    ])
     tmp_ids = _ckpt_ids(cand)
     jac_edges = verified_jaccard_pairs(
         docs, cand, id_col, text_col, n, threshold

@@ -68,17 +68,17 @@ def datapackage_schema(descriptor: str | dict, resource: str | None = None) -> T
 
 
 def resource_path(descriptor: str | dict, resource: str | None = None,
-                  base: str | None = None) -> str:
-    dp = load_descriptor(descriptor)
-    res = _find_resource(dp, resource)
-    path = res["path"]
-    if isinstance(path, list):
-        path = path[0]
-    if base:
-        return os.path.join(base, path) if "://" not in base else urljoin(
-            base + "/", path
-        )
-    return path
+                  base: str | None = None) -> list[str]:
+    """Every file of the resource: a ``path`` may be one file or a list
+    of them (a resource split over several objects, as in the
+    reference's S3 manifest, reference main.py:95-103)."""
+    res = _find_resource(load_descriptor(descriptor), resource)
+    paths = res["path"] if isinstance(res["path"], list) else [res["path"]]
+    if not base:
+        return paths
+    if "://" in base:
+        return [urljoin(base + "/", p) for p in paths]
+    return [os.path.join(base, p) for p in paths]
 
 
 def read_datapackage_resource(
@@ -86,9 +86,10 @@ def read_datapackage_resource(
     descriptor: str | dict,
     resource: str | None = None,
     base: str | None = None,
-    path: str | None = None,
+    path: str | list[str] | None = None,
 ) -> DataFrame:
-    """Descriptor → StructType → ``spark.read.csv``.
+    """Descriptor → StructType → ``spark.read.csv`` over every file of
+    the resource.
 
     ``multiLine`` is on because reference fixtures carry quoted multi-line
     description fields (reference tests/fixtures/data/risk.csv:2-4).

@@ -157,32 +157,3 @@ def test_catalog_bucketed_query_matches_plain(spark, sf_dir):
     )
     assert bucketed == plain
 
-
-def test_auto_picks_bucketed_under_skew_and_plain_uniform(spark):
-    from aggregator_spark.operators.asof import asof_join_auto
-
-    rng = random.Random(5)
-    # skewed: 95% one key
-    lrows_hot = [
-        (0 if rng.random() < 0.95 else rng.randrange(1, 50),
-         _ts(rng.uniform(0, 600)), i)
-        for i in range(4000)
-    ]
-    # uniform: 500 keys
-    lrows_uni = [
-        (rng.randrange(500), _ts(rng.uniform(0, 600)), i)
-        for i in range(4000)
-    ]
-    rrows = [(k, _ts(m * 30.0), 1000 + 60 * k + m)
-             for k in range(50) for m in range(20)]
-    for lrows, expect_bucketed in ((lrows_hot, True), (lrows_uni, False)):
-        left, right = _mk(spark, lrows, rrows)
-        kw = dict(on="k", left_time="lt", right_time="rt",
-                  right_cols=["rid", "rt"])
-        out = asof_join_auto(left, right, sample_fraction=0.5, **kw)
-        # the two formulations differ observably in plan shape: the
-        # bucketed one windows on (__k, __b)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        has_bucket = "__b" in plan
-        assert has_bucket == expect_bucketed, plan[:500]
-        assert _pairs(out) == _pairs(asof_join(left, right, **kw))

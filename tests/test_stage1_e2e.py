@@ -52,30 +52,3 @@ def test_stage1_end_to_end(spark, tmp_path):
         "2016-09-28 00:00:00,2,US,4444,1,556.9",
     ]
 
-
-def test_fused_equals_reference_shape(spark):
-    """fused countDistinct variant must equal the distinct->count shape."""
-    import datetime
-
-    from aggregator_spark.operators.aggregate import aggregate_counts
-    from aggregator_spark.schemas import LOGENTRY
-
-    rows = []
-    t0 = datetime.datetime(2016, 9, 28)
-    for d in range(3):
-        for i in range(30):
-            # duplicates: each ip appears twice per day
-            for _ in range(2):
-                rows.append(
-                    (
-                        t0 + datetime.timedelta(days=d, hours=i % 24),
-                        f"10.0.0.{i % 7}",
-                        1 + i % 2,
-                        100 + i % 3,
-                        "US" if i % 2 else "DE",
-                    )
-                )
-    df = spark.createDataFrame(rows, LOGENTRY)
-    a = [tuple(r) for r in aggregate_counts(df, threshold=0).collect()]
-    b = [tuple(r) for r in aggregate_counts(df, threshold=0, fused=True).collect()]
-    assert a == b and len(a) > 0

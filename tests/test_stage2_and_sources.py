@@ -232,7 +232,37 @@ def test_datapackage_reader(spark, tmp_path):
         0.0, "test-risk", "Test Risk", False, "Testable", "count", 0.13456,
         "Nice\nSmall\nDescription",
     )
-    assert rows[1][0] == 100.0 and rows[1][6] == 1.0
+    # the empty trailing description is NULL, not '' (the reference's
+    # ``null ''`` load, reference main.py:307)
+    assert rows[1][0] == 100.0 and rows[1][6] == 1.0 and rows[1][7] is None
+
+
+def test_datapackage_multi_file_resource(spark, tmp_path):
+    # a path LIST (manifest-style, reference main.py:95-103): every
+    # file of the resource is read, not only the first
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    (data_dir / "a.csv").write_text("id,slug\n1,one\n")
+    (data_dir / "b.csv").write_text("id,slug\n2,two\n")
+    dp = {
+        "name": "multi",
+        "resources": [
+            {
+                "name": "r",
+                "path": ["data/a.csv", "data/b.csv"],
+                "schema": {
+                    "fields": [
+                        {"name": "id", "type": "integer"},
+                        {"name": "slug", "type": "string"},
+                    ]
+                },
+            }
+        ],
+    }
+    desc = tmp_path / "datapackage.json"
+    desc.write_text(json.dumps(dp))
+    df = read_datapackage_resource(spark, str(desc))
+    assert sorted(map(tuple, df.collect())) == [(1, "one"), (2, "two")]
 
 
 def test_config_loader_env_substitution():
