@@ -58,8 +58,7 @@ def q_clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user expanding-window outlier flags over event values
     (operators/anomaly.py:expanding_zscore) — exact decimal running
-    moments, one shuffle, no self-join. The streaming twin
-    (streaming/anomaly_stream.py) is bit-identical on a log replay."""
+    moments, one shuffle, no self-join."""
     from aggregator_spark.operators.anomaly import expanding_zscore
 
     events = load_testdata(spark, sf_dir, "events")

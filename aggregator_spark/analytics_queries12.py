@@ -207,12 +207,10 @@ _ZBITS = 4
 
 def q_zorder_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT-quantile Morton (Z-order) clustering keys over the fact
-    table's (value, user_id) — the write-side layout primitive
-    (sources/layout.py writes the curve with approxQuantile bounds;
-    this entry is the driver-checkable exact twin): each dimension
-    buckets to its NTILE(16) rank tile — rank-space, so skew spreads
-    uniformly along the curve — and tiles interleave bit-by-bit into
-    one long key. Rows sorted by zkey give every interleaved column
+    table's (value, user_id) — the write-side layout primitive: each
+    dimension buckets to its NTILE(16) rank tile — rank-space, so skew
+    spreads uniformly along the curve — and tiles interleave bit-by-bit
+    into one long key. Rows sorted by zkey give every interleaved column
     real min/max row-group skipping.
 
     Both NTILEs run on the bounded-rank machinery (global order ⇒

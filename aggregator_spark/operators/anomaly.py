@@ -1,8 +1,7 @@
 """Per-key expanding-window anomaly detection: flag a value as an
 outlier against the EXACT running moments of all strictly-earlier
 values for the same key — the online feature-drift / sensor-outlier
-primitive (batch form here; the streaming twin with identical
-arithmetic lives in streaming/anomaly_stream.py).
+primitive.
 
 Cross-engine determinism (the driver hashes values): the running
 moments are EXACT — sum(x) and sum(x*x) accumulate as decimal(30,6)
@@ -30,10 +29,7 @@ decimal cast would silently NULL the square while count() still saw
 the row — variance would under-sum and the zero-variance branch would
 then flag everything — so the operator RAISES on envelope violations
 instead (guarded square below). NaN/NULL values are exempt (skipped
-like NULLs everywhere). The streaming twin has its own, narrower
-envelope (int64 micro-unit accumulation: |value| ≤ ~3e4 over 1e9 rows
-per key — see streaming/anomaly_stream.py); inside that envelope the
-two are bit-identical.
+like NULLs everywhere).
 """
 
 from __future__ import annotations

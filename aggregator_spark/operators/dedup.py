@@ -1361,10 +1361,7 @@ def doc_segments(
 
 def segment_df(segs: DataFrame) -> DataFrame:
     """Document frequency per segment hash: (sh, df) with df = number
-    of distinct documents containing the segment. The relation the
-    incremental boilerplate monitor maintains as batch deltas
-    (streaming/boilerplate_stream.py) — per-batch counts sum to this
-    exactly because each document arrives in exactly one batch."""
+    of distinct documents containing the segment."""
     return segs.groupBy("sh").agg(F.count_distinct("doc_id").alias("df"))
 
 
@@ -1375,7 +1372,6 @@ def line_dedup_rewrite(
     seg_len: int = 12,
     df_threshold: int = 3,
     by_lines: bool = False,
-    seg_df: DataFrame | None = None,
 ) -> DataFrame:
     """Line-level boilerplate removal (CCNet, Wenzek et al. 2020 §4.1;
     RefinedWeb/FineWeb run the same stage): a segment whose exact
@@ -1397,21 +1393,13 @@ def line_dedup_rewrite(
     is deliberately NOT broadcast (real crawls have boilerplate sets
     proportional to the site count); the one place segment text
     shuffles is the per-doc rebuild, keyed by doc_id and linear in
-    output size — unavoidable for a rewrite.
-
-    With ``seg_df`` (a (sh, df) relation, e.g. the incrementally
-    maintained corpus-wide document frequencies served by
-    ``streaming/boilerplate_stream.py``), the df pass is skipped and
-    the boilerplate decision uses the EXTERNAL counts — the seam that
-    makes the streaming monitor structurally batch-identical: both
-    paths run this same decision + rebuild plan, only the df relation's
-    provenance differs."""
+    output size — unavoidable for a rewrite."""
     segs = doc_segments(
         docs, id_col=id_col, text_col=text_col, seg_len=seg_len,
         by_lines=by_lines,
     ).select("doc_id", "seg_idx", "seg", F.xxhash64("seg").alias("sh"))
     boiler = (
-        (segment_df(segs) if seg_df is None else seg_df)
+        segment_df(segs)
         .filter(F.col("df") >= df_threshold)
         .select("sh", F.lit(True).alias("is_boiler"))
     )

@@ -26,6 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the reference applies every cube-templated statement once per
+# granularity (main.py:379-384 create_or_update_cubes)
+from aggregator_spark.operators.cube import GRANULARITIES
+
 
 def write_jdbc(
     df: DataFrame,
@@ -49,10 +53,6 @@ def read_jdbc(
     return spark.read.jdbc(url=url, table=table, properties=properties or {})
 
 
-# the reference applies every cube-templated statement once per
-# granularity (main.py:379-384 create_or_update_cubes)
-CUBE_GRANULARITIES = ["week", "month", "quarter", "year"]
-
 # 4 primary keys (reference main.py:499-503). Postgres auto-names them
 # <table>_pkey — the names the reference's own test asserts
 # (tests/aggregation_tests.py:462) — so the derby dialect names them
@@ -74,7 +74,7 @@ FOREIGN_KEYS: list[tuple[str, str, str, str, str]] = [
     ("fact_count", "fk_count_time", "date", "dim_date", "date"),
 ] + [
     (f"agg_risk_country_{t}", f"fk_cube_{kind}_{t}", col, ref_t, ref_c)
-    for t in CUBE_GRANULARITIES
+    for t in GRANULARITIES
     for kind, col, ref_t, ref_c in (
         ("risk", "risk", "dim_risk", "id"),
         ("country", "country", "dim_country", "id"),
@@ -97,7 +97,7 @@ INDEXES: list[tuple[str, str, list[tuple[str, bool]]]] = [
     ("idx_date", "fact_count", [("date", False)]),
 ] + [
     entry
-    for t in CUBE_GRANULARITIES
+    for t in GRANULARITIES
     for entry in (
         (f"idx_all_cube_{t}", f"agg_risk_country_{t}",
          [("date", False), ("country", False), ("risk", False)]),

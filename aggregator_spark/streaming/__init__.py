@@ -1,6 +1,3 @@
-from aggregator_spark.streaming.ingest import (
-    streaming_daily_counts,
-    streaming_dedup_counts,
-)
+from aggregator_spark.streaming.ingest import streaming_dedup_counts
 
-__all__ = ["streaming_daily_counts", "streaming_dedup_counts"]
+__all__ = ["streaming_dedup_counts"]

@@ -7,60 +7,19 @@ event-time windows and late-data handling.
 
 Batch plan (reference main.py:206-215):
     distinct(ip, day, ...) → groupBy(day, ...).count
-Streaming plan:
-    withWatermark(ts) → groupBy(window(ts, 1 day), keys)
-      .agg(approx_count_distinct(ip))
+Streaming plan (``streaming_dedup_counts``, exact):
+    select(date_trunc(day, ts) as day, ...) → withWatermark(day)
+      → dropDuplicates(ip, day, ...) → groupBy(window(day, 1 day), ...)
+      .count
 
-Exact distinct-count over a stream needs per-key state proportional to
-distinct IPs; ``approx_count_distinct`` (HyperLogLog++) keeps state
-O(sketch) per group — at 100 TB/day this is the only sustainable shape.
-The exact variant, ``streaming_dedup_counts``, watermarks the dedup key's
-own ``day`` column, so its dedup state holds one row per distinct
-(ip, day, keys) for the days the watermark has not passed (the newest
-two under the default 1-day delay) and is evicted as it moves on. A row
-whose day is already behind the watermark is dropped.
+The dedup state stays bounded because the watermark sits on the dedup
+key's own ``day`` column (see the function). Approximate (HLL++) daily
+counts are batch only: the catalog key ``approx_distinct_daily``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def streaming_daily_counts(
-    stream: DataFrame,
-    ts_col: str = "date",
-    ip_col: str = "ip",
-    key_cols: tuple[str, ...] = ("risk", "asn", "country"),
-    watermark: str = "1 day",
-    window: str = "1 day",
-) -> DataFrame:
-    """Approximate (HLL++) distinct-IP counts per tumbling event-time
-    window — bounded state, append-mode emission after watermark."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), *key_cols)
-        .agg(F.approx_count_distinct(ip_col).alias("count"))
-        .select(
-            F.col("win.start").alias("date"), *key_cols, "count"
-        )
-    )
-
-
-def streaming_dedup_within_watermark(
-    stream: DataFrame,
-    ts_col: str = "date",
-    key_cols: tuple[str, ...] = ("ip", "risk", "asn", "country"),
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Streaming dedup via ``dropDuplicatesWithinWatermark``: unlike
-    plain ``dropDuplicates`` (whose state lives forever unless the
-    event-time column is part of the key), state here is evicted as the
-    watermark passes — the right primitive when "duplicate" means
-    "same key within the delay horizon" rather than "ever seen".
-    Emits the surviving raw rows (first arrival wins)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
 
 
 def streaming_dedup_counts(

@@ -16,8 +16,7 @@ Shape::
 
 The bloom is INCREMENTAL BY CONSTRUCTION: bits only ever turn on, so
 the filter of a union of waves is the bitwise OR of the per-wave
-filters — the read-time ``bit_or`` over word deltas is exact, the
-same way the count stores' read-time SUM is (delta_store.py). A
+filters — the read-time ``bit_or`` over word deltas is exact. A
 retried batch is harmless twice over: every read is SELF-EXCLUDING
 (batch_id < N — a half-applied attempt never feeds its own retry, the
 corpus_prepare_stream discipline) and every write overwrites its own

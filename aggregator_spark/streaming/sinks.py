@@ -1,13 +1,12 @@
-"""Streaming sinks beyond the built-ins: idempotent foreachBatch
-patterns.
+"""Streaming sink beyond the built-ins: an idempotent foreachBatch
+writer.
 
 Structured Streaming's file sink is append-only; real pipelines need
-(a) upsert semantics into a keyed store and (b) exactly-once file
-output under retries. Both ride ``foreachBatch``: the function receives
-(micro-batch DataFrame, batch_id), and *idempotence on batch_id* is
-what turns at-least-once execution into exactly-once output — a
-retried batch overwrites its own directory / re-runs its own
-transactional write instead of duplicating rows.
+exactly-once file output under retries. That rides ``foreachBatch``:
+the function receives (micro-batch DataFrame, batch_id), and
+*idempotence on batch_id* is what turns at-least-once execution into
+exactly-once output — a retried batch overwrites its own directory
+instead of duplicating rows.
 """
 
 from __future__ import annotations
@@ -26,77 +25,5 @@ def batch_partitioned_parquet_sink(base_path: str):
         batch_df.write.mode("overwrite").parquet(
             f"{base_path}/batch_id={batch_id}"
         )
-
-    return write
-
-
-def upsert_parquet_sink(target_path: str, key_cols: list[str]):
-    """foreachBatch keyed upsert into a parquet table: existing rows
-    whose key appears in the micro-batch are replaced (left_anti +
-    union), everything else kept. The rewrite goes through an overwrite
-    of the target — on a real deployment this is the exact shape you
-    hand to Delta/Iceberg ``MERGE INTO`` instead (file-level rewrite of
-    a plain parquet dir is the dependency-free stand-in)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates(key_cols)
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(conf)
-        Path = jvm.org.apache.hadoop.fs.Path
-        target = Path(target_path)
-        aside = Path(target_path + "__old")
-        # crash recovery: a previous attempt died between moving the
-        # live table aside and moving its replacement in — restore the
-        # pre-image so this retry merges against real data, not void
-        if not fs.exists(target) and fs.exists(aside):
-            fs.rename(aside, target)
-        if fs.exists(target):
-            # any read failure here (IO, corrupt footer) must surface —
-            # swallowing it would rewrite the table as just this batch
-            current = spark.read.parquet(target_path)
-            merged = current.join(
-                batch.select(*key_cols), key_cols, "left_anti"
-            ).unionByName(batch)
-        else:
-            merged = batch  # genuine bootstrap: table never written
-        # never overwrite the path being lazily read: write the merged
-        # result to a temp dir (fully distributed, no collect), then
-        # swap via two renames with the pre-image kept aside so a crash
-        # at any point leaves either the old or the new table reachable
-        tmp = f"{target_path}__tmp_b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if fs.exists(aside):
-            fs.delete(aside, True)
-        if fs.exists(target):
-            fs.rename(target, aside)
-        fs.rename(Path(tmp), target)
-        fs.delete(aside, True)
-
-    return write
-
-
-def versioned_merge_sink(root: str, key_cols: list[str]):
-    """foreachBatch CDC-apply into a *versioned* table
-    (``sources/versioned_table.py``): each micro-batch MERGEs as a new
-    immutable snapshot — readers keep snapshot isolation mid-stream,
-    and every batch's pre-image stays time-travelable. Batch 0
-    bootstraps the table. Exactly-once note: a retried batch re-merges
-    the same keyed rows — the merge is idempotent for identical batch
-    content (replace-by-key), so duplicates cannot accumulate."""
-    from aggregator_spark.sources.versioned_table import (
-        list_versions,
-        merge_upsert,
-        write_version,
-    )
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if not list_versions(root):
-            write_version(batch_df.dropDuplicates(key_cols), root)
-        else:
-            merge_upsert(
-                batch_df.sparkSession, root, batch_df, key_cols
-            )
 
     return write

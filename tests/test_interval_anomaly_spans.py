@@ -1,8 +1,7 @@
 """Late round-6 operators: interval join semantics, expanding z-score
-(batch, and the streaming twin's bit-parity), bigram LM scoring, and
-duplicated-span removal. Oracle hash-matches run in test_entry_oracle;
-these pin the SEMANTICS on crafted inputs where the right answer is
-known by construction."""
+(plain and bucketed), bigram LM scoring, and duplicated-span removal.
+Oracle hash-matches run in test_entry_oracle; these pin the SEMANTICS
+on crafted inputs where the right answer is known by construction."""
 
 from __future__ import annotations
 
@@ -125,46 +124,6 @@ def test_expanding_zscore_semantics(spark):
     assert got[390]["z_micro"] == math.floor(z * 1e6)
     # in-spread rows with enough history stay quiet
     assert got[300 + 7]["is_anomaly"] is False
-
-
-def test_zscore_stream_matches_batch(spark, tmp_path):
-    from aggregator_spark.streaming.anomaly_stream import (
-        zscore_outliers_stream,
-    )
-
-    events = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("event_id", "user_id", "ts", "value")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    src = str(tmp_path / "ev_stream")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, ts timestamp, value double"
-    ).parquet(src)
-    q = (
-        zscore_outliers_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("zscore_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        r["event_id"]: (r["n_prior"], r["z_micro"], r["is_anomaly"])
-        for r in spark.sql("SELECT * FROM zscore_out").collect()
-    }
-    want = {
-        r["event_id"]: (r["n_prior"], r["z_micro"], r["is_anomaly"])
-        for r in expanding_zscore(events).collect()
-    }
-    assert got == want  # bit-identical lambda-architecture contract
 
 
 # ---------------------------------------------------------------- spans
@@ -345,13 +304,16 @@ def test_zscore_bucketed_keeps_null_key_and_time_rows(spark):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, ts timestamp, value double"
     )
-    plain = {tuple(r) for r in expanding_zscore(df).collect()}
+    got = expanding_zscore(df).collect()
+    plain = {tuple(r) for r in got}
     buck = {
         tuple(r)
         for r in expanding_zscore_bucketed(df, bucket_seconds=60).collect()
     }
     assert len(plain) == 4
     assert buck == plain
+    # the NULL-ts row sorts first, so it is the first prior of its key
+    assert {r["event_id"]: r["n_prior"] for r in got}[4] == 1
 
 
 # ------------------------------------------------------- r7 ADVICE pins
@@ -384,51 +346,6 @@ def test_zscore_nan_and_null_values_do_not_raise(spark):
     got = {r["event_id"]: r for r in expanding_zscore(df).collect()}
     assert len(got) == 3
     assert got[3]["n_prior"] == 0  # NaN/NULL contributed nothing
-
-
-def test_zscore_stream_null_ts_parity(spark, tmp_path):
-    # a key mixing NULL and non-NULL ts in ONE micro-batch: the batch
-    # window sorts NULL ts FIRST (asc_nulls_first), so the streaming
-    # twin's pandas sort must use na_position='first' (pandas defaults
-    # NaT LAST, which reorders the running moments) — ADVICE r6
-    from aggregator_spark.streaming.anomaly_stream import (
-        zscore_outliers_stream,
-    )
-
-    rows = [(1, 7, None, 100.0)]
-    rows += [(2 + i, 7, _ts(i), 10.0 + i) for i in range(7)]
-    events = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, value double"
-    )
-    src = str(tmp_path / "null_ts_stream")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "event_id long, user_id long, ts timestamp, value double"
-    ).parquet(src)
-    q = (
-        zscore_outliers_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("zscore_null_ts")
-        .option("checkpointLocation", str(tmp_path / "ckpt_null_ts"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        r["event_id"]: (r["n_prior"], r["z_micro"], r["is_anomaly"])
-        for r in spark.sql("SELECT * FROM zscore_null_ts").collect()
-    }
-    want = {
-        r["event_id"]: (r["n_prior"], r["z_micro"], r["is_anomaly"])
-        for r in expanding_zscore(events).collect()
-    }
-    assert want[2][0] == 1  # the NULL-ts row IS the first prior
-    assert got == want
 
 
 def test_interval_join_fractional_second_bounds(spark):

@@ -1,9 +1,7 @@
-"""HLL sketch merge invariants + scanlog-source → streaming-ingest
-integration (the custom stream feeding the stage-1 streaming twin)."""
+"""HLL sketch merge invariants and Count-Min counters, batch and
+streaming."""
 
 from __future__ import annotations
-
-import datetime
 
 from pyspark.sql import functions as F
 
@@ -12,11 +10,6 @@ from aggregator_spark.operators.sketches import (
     monthly_distinct_users,
 )
 from aggregator_spark.schemas import load_testdata
-from aggregator_spark.streaming.ingest import streaming_daily_counts
-from aggregator_spark.streaming.scanlog_source import (
-    batch_rows,
-    register_scanlog_source,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -60,51 +53,6 @@ def test_sketch_estimate_near_exact(spark):
     assert est.keys() == exact.keys()
     for day, n in exact.items():
         assert abs(est[day] - n) <= max(2, 0.05 * n)
-
-
-def test_scanlog_stream_feeds_daily_ingest(spark, tmp_path):
-    """Custom streaming source → watermark+window ingest must equal the
-    batch recompute over the same deterministic rows."""
-    register_scanlog_source(spark)
-    stream = (
-        spark.readStream.format("scanlog")
-        .option("rows_per_batch", "80")
-        .option("max_batches", "3")
-        .load()
-    )
-    agg = streaming_daily_counts(stream, watermark="0 seconds")
-    out: list = []
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(
-            lambda df, bid: (out.clear(), out.extend(map(tuple, df.collect())))
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    rows = [
-        r
-        for b in range(3)
-        for r in batch_rows(b, 80, datetime.date(2016, 8, 5))
-    ]
-    batch_df = spark.createDataFrame(
-        rows, "date timestamp, ip string, risk int, asn long, country string"
-    )
-    expected = {
-        tuple(r)
-        for r in batch_df.groupBy(
-            F.date_trunc("day", "date").alias("date"),
-            "risk",
-            "asn",
-            "country",
-        )
-        .agg(F.approx_count_distinct("ip").alias("count"))
-        .collect()
-    }
-    assert set(out) == expected
 
 
 def test_cms_counters_streaming_equals_batch(spark, tmp_path):

@@ -15,10 +15,7 @@ from aggregator_spark.operators.multimodal import (
     sample_video_frames,
 )
 from aggregator_spark.schemas import LOGENTRY, MEDIA
-from aggregator_spark.streaming.ingest import (
-    streaming_daily_counts,
-    streaming_dedup_counts,
-)
+from aggregator_spark.streaming.ingest import streaming_dedup_counts
 
 
 def _write_scan_parquet(spark, path, extra=()):
@@ -32,7 +29,7 @@ def _write_scan_parquet(spark, path, extra=()):
     spark.createDataFrame(rows, LOGENTRY).write.mode("overwrite").parquet(path)
 
 
-@pytest.mark.parametrize("variant", ["approx", "exact"])
+@pytest.mark.parametrize("variant", ["exact"])
 def test_streaming_daily_counts(spark, tmp_path, variant):
     src = str(tmp_path / "scans")
     # a third day moves the 1-day watermark past the first day's window
@@ -40,13 +37,10 @@ def test_streaming_daily_counts(spark, tmp_path, variant):
         spark, src, [(datetime.datetime(2016, 9, 30, 1, 0), "71.3.0.3", 1, 4444, "US")]
     )
     stream = spark.readStream.schema(LOGENTRY).parquet(src)
-    fn = streaming_daily_counts if variant == "approx" else streaming_dedup_counts
-    agg = fn(stream)
+    agg = streaming_dedup_counts(stream)
     assert agg.columns == ["date", "risk", "asn", "country", "count"]
     q = (
-        agg.writeStream.outputMode(
-            "append" if variant == "exact" else "update"
-        )
+        agg.writeStream.outputMode("append")
         .format("memory")
         .queryName(f"out_{variant}")
         .option(
@@ -62,18 +56,9 @@ def test_streaming_daily_counts(spark, tmp_path, variant):
         (r["date"].date().isoformat(), r["risk"], r["asn"], r["country"], r["count"])
         for r in spark.sql(f"SELECT * FROM out_{variant}").collect()
     ]
-    # day 1: ips .1 (twice) and .2 → 2 distinct; days 2 and 3: 1 each
-    if variant == "approx":
-        # update mode emits every group the batch touched
-        assert sorted(got) == [
-            ("2016-09-28", 1, 4444, "US", 2),
-            ("2016-09-29", 1, 4444, "US", 1),
-            ("2016-09-30", 1, 4444, "US", 1),
-        ]
-    else:
-        # append mode emits a day once the watermark passes it: the
-        # newest two days stay open
-        assert got == [("2016-09-28", 1, 4444, "US", 2)]
+    # day 1: ips .1 (twice) and .2 → 2 distinct. Append mode emits a
+    # day once the watermark passes it: the newest two days stay open
+    assert got == [("2016-09-28", 1, 4444, "US", 2)]
 
 
 def test_streaming_exact_matches_batch(spark, tmp_path):
@@ -284,32 +269,3 @@ def test_resize_images_fake(spark):
 
     with pytest.raises((PySparkException, Py4JJavaError)):
         resize_images(_media_df(spark)).collect()
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    from aggregator_spark.streaming.ingest import (
-        streaming_dedup_within_watermark,
-    )
-
-    src = str(tmp_path / "scans_ddw")
-    _write_scan_parquet(spark, src)  # has a duplicate ip on day 1
-    stream = spark.readStream.schema(LOGENTRY).parquet(src)
-    out = streaming_dedup_within_watermark(stream, watermark="2 days")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ddw_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ddw"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM ddw_out").collect()
-    # 4 input rows: the duplicate (ip,risk,asn,country) within the
-    # horizon collapses -> first arrival survives; day-2 row is a
-    # duplicate KEY within the watermark window too
-    keys = [(r["ip"], r["risk"], r["asn"], r["country"]) for r in rows]
-    assert len(keys) == len(set(keys))
-    assert len(rows) == 2  # (.1) and (.2): day-2 .1 dropped within horizon

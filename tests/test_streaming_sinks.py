@@ -1,26 +1,23 @@
-"""foreachBatch sinks: batch-partitioned idempotent output and keyed
-parquet upsert."""
+"""foreachBatch sinks: batch-partitioned idempotent output and a
+complete-mode top-k."""
 
 from __future__ import annotations
 
 import datetime
 
 from aggregator_spark.schemas import EVENTS
-from aggregator_spark.streaming.sinks import (
-    batch_partitioned_parquet_sink,
-    upsert_parquet_sink,
-)
+from aggregator_spark.streaming.sinks import batch_partitioned_parquet_sink
 
 T0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
 
 
-def _mk(event_id, minutes, user_id, etype="click", value=1.0):
+def _mk(event_id, minutes, user_id):
     return (
         event_id,
         T0 + datetime.timedelta(minutes=minutes),
         user_id,
-        etype,
-        value,
+        "click",
+        1.0,
         "{}",
     )
 
@@ -46,37 +43,6 @@ def test_batch_partitioned_sink(spark, tmp_path):
     result = spark.read.parquet(out)
     assert result.count() == 2
     assert "batch_id" in result.columns
-
-
-def test_upsert_sink(spark, tmp_path):
-    src = str(tmp_path / "src_u")
-    target = str(tmp_path / "target_u")
-    # batch 1: two users
-    spark.createDataFrame(
-        [_mk(1, 0, 7, value=1.0), _mk(2, 5, 8, value=2.0)], EVENTS
-    ).coalesce(1).write.parquet(src)
-
-    sink = upsert_parquet_sink(target, ["user_id"])
-    stream = spark.readStream.schema(EVENTS).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt_u"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: update user 7, add user 9
-        spark.createDataFrame(
-            [_mk(3, 10, 7, value=5.0), _mk(4, 12, 9, value=3.0)], EVENTS
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    final = {
-        r["user_id"]: r["value"] for r in spark.read.parquet(target).collect()
-    }
-    assert final == {7: 5.0, 8: 2.0, 9: 3.0}
 
 
 def test_streaming_topk_complete_mode(spark, tmp_path):
@@ -113,41 +79,3 @@ def test_streaming_topk_complete_mode(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
     assert latest["top"] == [(8, 3), (7, 2)]
-
-
-def test_upsert_sink_crash_window_recovery(spark, tmp_path):
-    """A crash between 'move live table aside' and 'move replacement in'
-    leaves target missing + __old present; the retry must restore the
-    pre-image and merge against it — not bootstrap from the batch alone
-    (which would silently truncate the table)."""
-    import os
-
-    target = str(tmp_path / "t_crash")
-    sink = upsert_parquet_sink(target, ["user_id"])
-    sink(spark.createDataFrame([_mk(1, 0, 7), _mk(2, 5, 8)], EVENTS), 0)
-    # simulate the crash window: live table moved aside, new one never in
-    os.rename(target, target + "__old")
-    sink(spark.createDataFrame([_mk(3, 10, 9)], EVENTS), 1)
-    users = {
-        r["user_id"] for r in spark.read.parquet(target).collect()
-    }
-    assert users == {7, 8, 9}
-    assert not os.path.exists(target + "__old")
-
-
-def test_upsert_sink_read_failure_raises(spark, tmp_path):
-    """An unreadable existing table must raise, never be treated as
-    empty (that path overwrote the whole table with one micro-batch)."""
-    import os
-
-    import pytest
-
-    target = str(tmp_path / "t_corrupt")
-    os.makedirs(target)
-    with open(os.path.join(target, "part-0.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    sink = upsert_parquet_sink(target, ["user_id"])
-    with pytest.raises(Exception):
-        sink(spark.createDataFrame([_mk(1, 0, 7)], EVENTS), 0)
-    # the corrupt pre-image is still there for an operator to inspect
-    assert os.path.exists(os.path.join(target, "part-0.parquet"))

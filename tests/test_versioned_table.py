@@ -86,44 +86,6 @@ def test_partitioned_serving_layout_prunes(spark, tmp_path):
     assert q.count() == 1
 
 
-def test_streaming_cdc_into_versioned_table(spark, tmp_path):
-    """Two micro-batches of keyed changes merge into successive
-    snapshots; final state = last-writer-wins per key, with the
-    intermediate snapshot still time-travelable."""
-    from aggregator_spark.streaming.sinks import versioned_merge_sink
-
-    src = str(tmp_path / "src")
-    root = str(tmp_path / "table")
-    b0 = _df(spark, [(1, "a"), (2, "b")])
-    b0.coalesce(1).write.parquet(src)
-
-    sink = versioned_merge_sink(root, ["id"])
-    stream = spark.readStream.schema("id long, val string").parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    # second wave of changes arrives as a new file
-    _df(spark, [(2, "B"), (3, "c")]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    assert sorted(map(tuple, read_table(spark, root).collect())) == [
-        (1, "a"),
-        (2, "B"),
-        (3, "c"),
-    ]
-    # pre-merge snapshot kept (time travel across stream batches)
-    assert sorted(map(tuple, read_table(spark, root, version=1).collect())) == [
-        (1, "a"),
-        (2, "b"),
-    ]
-
-
 def test_orphan_snapshot_dir_does_not_wedge_writes(spark, tmp_path):
     """A crash between the snapshot write and the manifest commit
     leaves an uncommitted v=<n> dir; the retry recomputes the same n
