@@ -28,7 +28,7 @@ import re
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from aggregator_spark.operators.text import fingerprint, normalized_text, tokens
+from aggregator_spark.operators.text import fingerprint
 from aggregator_spark.operators.util import scatter
 
 DEFAULT_SHINGLE = 3
@@ -53,22 +53,6 @@ def exact_dup_clusters(
     )
 
 
-def shingle_expr(text_col, n: int = DEFAULT_SHINGLE):
-    """Distinct word n-gram shingles as an array column (normalized
-    text → tokens → sliding windows joined by single spaces)."""
-    toks = tokens(normalized_text(text_col))
-    # guard: Spark sequence(1, size-n+1) DESCENDS when size < n (DuckDB
-    # range() is empty) — short docs must yield zero shingles
-    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        )
-    )
-
-
 # Java \s (used by the JVM-side expressions and the DuckDB oracle's \s)
 # is exactly this ASCII class; Python's re \s would also match unicode
 # whitespace, so spell it out for cross-engine parity
@@ -77,9 +61,10 @@ _WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 def _shingle_batches(n: int):
     """mapInPandas worker: (doc_id, text) batches → distinct word
-    n-gram (doc_id, shingle) rows. Same function as ``shingle_expr``
-    (normalize → whitespace tokens → sliding n-grams, distinct,
-    first-occurrence order irrelevant downstream)."""
+    n-gram (doc_id, shingle) rows: whitespace-collapsed, trimmed,
+    lowercased text → single-space tokens → sliding n-grams joined by one
+    space, distinct per doc (first-occurrence order irrelevant
+    downstream); a doc of fewer than n tokens yields none."""
 
     def fn(batches):
         import pandas as pd
@@ -115,12 +100,12 @@ def doc_shingles(
     drops shingles whose document frequency exceeds ``max_df`` (skew cap
     for the similarity join).
 
-    Arrow-batched Pandas path rather than ``explode(shingle_expr(...))``:
-    the nested higher-order-function expressions (transform + slice +
-    concat_ws per element) evaluate interpreted, outside whole-stage
-    codegen, and measured ~10× slower than one vectorized Python pass
-    (13 s vs <1 s for 260k shingles at sf0.1). Input is ``scatter``-ed
-    so the Python stage runs on every core."""
+    Arrow-batched Pandas path rather than an ``explode`` of a column
+    expression: the nested higher-order-function expressions (transform +
+    slice + concat_ws per element) evaluate interpreted, outside
+    whole-stage codegen, and measured ~10× slower than one vectorized
+    Python pass (13 s vs <1 s for 260k shingles at sf0.1). Input is
+    ``scatter``-ed so the Python stage runs on every core."""
     pairs = scatter(docs).select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).mapInPandas(

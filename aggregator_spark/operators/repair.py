@@ -15,7 +15,10 @@ The reference round-trips these rows through the driver (fetchall → INSERT
 loop); here they stay distributed: ``left_anti`` join + ``unionByName``.
 The first-wins dedup becomes a deterministic window ``row_number() == 1``
 ordered by country (the reference's loop order is arbitrary dict order —
-we pin it, SURVEY.md §2.6 U4).
+we pin it, SURVEY.md §2.6 U4). Discovery (``missing_*``) and placeholder
+append (``with_*_placeholders``) are separate steps, so a caller that
+also logs the missing keys (stage 2) computes each missing frame once and
+feeds both the log and the append from it.
 
 Scale notes: dims are broadcast; the anti-join never shuffles the fact.
 """
@@ -39,10 +42,13 @@ def missing_countries(fact: DataFrame, dim_country: DataFrame) -> DataFrame:
     )
 
 
-def repair_dim_country(fact: DataFrame, dim_country: DataFrame) -> DataFrame:
-    """U2 (reference main.py:446-452): append ('XX','unknown',...) rows —
-    'unknown' in every non-key column of whatever dim schema is given."""
-    missing = missing_countries(fact, dim_country).select(
+def with_country_placeholders(
+    dim_country: DataFrame, missing: DataFrame
+) -> DataFrame:
+    """U2 (reference main.py:446-452): append one ('XX','unknown',...) row
+    per ``missing_countries`` row — 'unknown' in every non-key column of
+    whatever dim schema is given."""
+    placeholders = missing.select(
         F.col("country").alias("id"),
         *[
             F.lit("unknown").cast(f.dataType).alias(f.name)
@@ -50,7 +56,14 @@ def repair_dim_country(fact: DataFrame, dim_country: DataFrame) -> DataFrame:
             if f.name != "id"
         ],
     )
-    return dim_country.unionByName(missing)
+    return dim_country.unionByName(placeholders)
+
+
+def repair_dim_country(fact: DataFrame, dim_country: DataFrame) -> DataFrame:
+    """U2: ``dim_country`` plus placeholders for the fact's missing ids."""
+    return with_country_placeholders(
+        dim_country, missing_countries(fact, dim_country)
+    )
 
 
 def missing_asns(fact: DataFrame, dim_asn: DataFrame) -> DataFrame:
@@ -74,11 +87,17 @@ def missing_asns(fact: DataFrame, dim_asn: DataFrame) -> DataFrame:
     )
 
 
-def repair_dim_asn(fact: DataFrame, dim_asn: DataFrame) -> DataFrame:
-    """U3 (reference main.py:486-488): append (n,'unknown',country-or-'XY')."""
-    missing = missing_asns(fact, dim_asn).select(
+def with_asn_placeholders(dim_asn: DataFrame, missing: DataFrame) -> DataFrame:
+    """U3 (reference main.py:486-488): append (n,'unknown',country-or-'XY')
+    per ``missing_asns`` row."""
+    placeholders = missing.select(
         F.col("asn").alias("number"),
         F.lit("unknown").alias("title"),
         F.coalesce(F.col("country"), F.lit("XY")).alias("country"),
     )
-    return dim_asn.unionByName(missing)
+    return dim_asn.unionByName(placeholders)
+
+
+def repair_dim_asn(fact: DataFrame, dim_asn: DataFrame) -> DataFrame:
+    """U3+U4: ``dim_asn`` plus placeholders for the fact's missing ASNs."""
+    return with_asn_placeholders(dim_asn, missing_asns(fact, dim_asn))

@@ -10,6 +10,10 @@ Defaults are chosen for correctness-vs-oracle and 100 TB-scale habits:
 - shuffle partitions default to the local core count (the 200 default is
   wrong in both directions; on a real cluster this would be set to
   ~2-3x total cores or left to AQE's coalescing).
+- a read lists up to 1024 paths without a Spark job: past Spark's
+  default of 32 it starts a parallel listing job, which in a local
+  session runs in the same JVM and only adds scheduling (the nightly
+  feed manifest is 70 paths).
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
